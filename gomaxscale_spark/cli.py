@@ -37,7 +37,14 @@ def build_parser() -> argparse.ArgumentParser:
     opt("gtid", "")
     opt("version", "")
     opt("uuid", "")
-    opt("read-timeout", "2.0")
+    opt(
+        "read-timeout",
+        "2.0",
+        help="seconds a read waits for data. Streaming: bounds only the wait for "
+        "a micro-batch's first event, so an idle stream yields an empty batch after "
+        "it; a batch ends when the socket is drained or at 10,000 events. "
+        "--once: three quiet waits in a row end the drain",
+    )
     p.add_argument("--once", action="store_true", help="drain in batch mode and exit")
     p.add_argument("--duration", type=float, default=None, help="stop streaming after N seconds")
     p.add_argument("--cpus", type=int, default=4)

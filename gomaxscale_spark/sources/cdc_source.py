@@ -22,6 +22,14 @@ inside one run), `gtid` is the protocol-level resume point sent as
 ``REQUEST-DATA db.table [gtid]`` on restart (the reference's WithGTID,
 gomaxscale_options.go:53-57).
 
+Micro-batch boundary: a batch ends at ``max_events_per_batch`` (default
+10,000) or, once it holds an event, when the socket is drained (no
+readable bytes). ``read_timeout`` (default 2 s) bounds only an empty
+wait: an idle stream yields an empty batch after it. A backlog is read
+in capped batches; a live tail is delivered as it arrives, the way the
+reference hands each decoded event straight to its consumer
+(gomaxscale.go:119-165).
+
 Scale: one CDC subscription is inherently a single TCP socket — the
 reader is a SimpleDataSourceStreamReader (driver-side prefetch), which
 is exactly the reference's single consumer goroutine. Parallelism comes
@@ -128,11 +136,15 @@ class MaxScaleCDCStreamReader(SimpleDataSourceStreamReader):
         ]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        """One micro-batch: drain what the socket has, bounded by
-        max_events_per_batch (maxOffsetsPerTrigger-style rate limiting).
-        A quiet period (read timeout) ends the batch — possibly empty;
-        on EOF the next read() reconnects with REQUEST-DATA <last gtid>
-        — the reference's restart semantics (gomaxscale.go:46-53).
+        """One micro-batch: the events available now. The batch ends
+        at max_events_per_batch (maxOffsetsPerTrigger-style rate
+        limiting) or, once it holds an event, as soon as the socket has
+        no readable bytes — each trigger takes what has arrived, as
+        Kafka's latestOffset does. ``read_timeout`` bounds only the wait
+        for a batch's first event: an idle stream returns an empty batch
+        after it. On EOF the next read() reconnects with REQUEST-DATA
+        <last gtid> — the reference's restart semantics
+        (gomaxscale.go:46-53).
 
         Exactly-once across reconnects: MaxScale's GTID resume is
         *inclusive* (events from the requested GTID onward are
@@ -168,10 +180,12 @@ class MaxScaleCDCStreamReader(SimpleDataSourceStreamReader):
         client = self._ensure_client(gtid)
         proto_errors = 0
         while len(rows) < self.max_events_per_batch:
+            if rows and not client.readable():
+                break  # socket drained → close out this micro-batch
             try:
                 events = client.scan()
             except (_socket.timeout, TimeoutError):
-                break  # quiet socket → close out this micro-batch
+                break  # no complete event within read_timeout
             except EOFError:
                 self._eof = True
                 break

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import select
 import socket
 import time as time_mod
 import uuid as uuid_mod
@@ -200,6 +201,15 @@ class CDCClient:
             loops += 1
             if loops > MAX_EMPTY_LOOPS:
                 raise CDCProtocolError("too many network iterations to find a json object")
+
+    def readable(self) -> bool:
+        """True when the socket's next recv returns at once: bytes are
+        buffered, or the server has closed the connection (``scan()``
+        then raises EOFError). A zero-timeout readiness check; never
+        blocks."""
+        assert self._sock is not None, "connect() first"
+        ready, _, _ = select.select([self._sock], [], [], 0)
+        return bool(ready)
 
     def events(self, max_idle_polls: int | None = None) -> Iterator[CDCEventFrame]:
         """Generator over the live stream; terminates on EOF, treats

@@ -151,6 +151,31 @@ def test_read_deadline_uses_injected_clock():
         c.close()
 
 
+def test_readable_reports_buffered_bytes_and_close():
+    """readable() never blocks: True once bytes are buffered, False on
+    a quiet socket, True again once the server closes — the next scan()
+    then raises EOFError."""
+    import time
+
+    def wait_readable(c):
+        deadline = time.monotonic() + 5.0
+        while not c.readable() and time.monotonic() < deadline:
+            time.sleep(0.01)
+        return c.readable()
+
+    # the server sends DML, stays quiet for write_delay + keep_open, closes
+    with MockMaxScaleServer(script=[DML], write_delay=0.5, keep_open=0.25) as addr:
+        c = make_client(addr)
+        c.connect()
+        assert wait_readable(c)
+        assert [e.data["sequence"] for e in c.scan()] == [42]
+        assert not c.readable()
+        assert wait_readable(c)
+        with pytest.raises(EOFError):
+            c.scan()
+        c.close()
+
+
 def test_classify_dml_with_namespace_column():
     """A DML row from a table that has a column literally named
     `namespace` must classify as DML even when JSON key order defeats

@@ -43,6 +43,12 @@ def dml(seq: int, **cols):
     return row
 
 
+def one_write(events) -> bytes:
+    """``events`` as a single wire write (one script item), so all of
+    them are buffered on the socket before the reader's first recv."""
+    return b"".join(json.dumps(e).encode() + b"\n" for e in events)
+
+
 @pytest.fixture(scope="module")
 def registered(spark):
     spark.dataSource.register(MaxScaleCDCDataSource)
@@ -124,7 +130,7 @@ def test_streaming_read_micro_batches(registered):
 def test_streaming_offsets_track_gtid(registered):
     from gomaxscale_spark.sources.cdc_source import MaxScaleCDCStreamReader
 
-    script = [dml(7, id=1), dml(9, id=2)]
+    script = [one_write([dml(7, id=1), dml(9, id=2)])]
     with MockMaxScaleServer(script=script) as addr:
         opts = read_options(addr)
         reader = MaxScaleCDCStreamReader(opts)
@@ -202,7 +208,7 @@ def test_rate_limit_max_events_per_batch(registered):
     gomaxscale.go:52): max_events_per_batch caps one micro-batch."""
     from gomaxscale_spark.sources.cdc_source import MaxScaleCDCStreamReader
 
-    script = [dml(i, id=i) for i in range(10)]
+    script = [one_write([dml(i, id=i) for i in range(10)])]
     with MockMaxScaleServer(script=script, keep_open=1.0) as addr:
         opts = dict(read_options(addr), max_events_per_batch="3")
         reader = MaxScaleCDCStreamReader(opts)
@@ -215,6 +221,95 @@ def test_rate_limit_max_events_per_batch(registered):
     assert end1["pos"] == 3
     assert len(rows2) == 3
     assert [r[2] for r in rows1 + rows2] == list(range(6))  # sequence column
+
+
+def test_trickle_batch_ends_when_socket_drained(registered):
+    """A batch closes once the socket holds no more bytes: under a
+    trickle it does not wait out read_timeout or fill to the cap, and
+    successive reads deliver every event exactly once, in order."""
+    from gomaxscale_spark.sources.cdc_source import MaxScaleCDCStreamReader
+
+    script = [dml(i, id=i) for i in range(20)]
+    with MockMaxScaleServer(script=script, write_delay=0.05, keep_open=3.0) as addr:
+        reader = MaxScaleCDCStreamReader(dict(read_options(addr), read_timeout="2.0"))
+        try:
+            t0 = time.monotonic()
+            rows, end = reader.read(reader.initialOffset())
+            elapsed = time.monotonic() - t0
+            got = list(rows)
+            assert elapsed < 1.0
+            assert 1 <= len(got) < 20
+            assert end["pos"] == len(got)
+            deadline = time.monotonic() + 10
+            while len(got) < 20 and time.monotonic() < deadline:
+                rows, nxt = reader.read(end)
+                rows = list(rows)
+                assert nxt["pos"] == end["pos"] + len(rows)
+                got += rows
+                end = nxt
+        finally:
+            reader.stop()
+    assert [r[2] for r in got] == list(range(20))  # sequence column
+
+
+def test_idle_socket_returns_empty_batch_after_read_timeout(registered):
+    """read_timeout bounds the wait for a batch's first event: with
+    nothing sent after the handshake, read() returns no rows and leaves
+    the offset where it was."""
+    from gomaxscale_spark.sources.cdc_source import MaxScaleCDCStreamReader
+
+    with MockMaxScaleServer(script=[], keep_open=5.0) as addr:
+        reader = MaxScaleCDCStreamReader(dict(read_options(addr), read_timeout="0.5"))
+        start = reader.initialOffset()
+        t0 = time.monotonic()
+        rows, end = reader.read(start)
+        elapsed = time.monotonic() - t0
+        rows = list(rows)
+        reader.stop()
+    assert rows == []
+    assert end == start
+    assert 0.4 <= elapsed < 3.0
+
+
+def test_stats_listener_counts_events_not_scans(registered):
+    """A foreachBatch that runs two actions scans each batch twice, so
+    Spark's numInputRows doubles; the listener counts the events the
+    source delivered (end.pos − start.pos) and passes through the
+    trigger's durationMs phases."""
+    from gomaxscale_spark.streaming.stats import PHASES, StatsListener
+
+    seen = []
+    listener = StatsListener(seen.append)
+    script = [one_write([DDL] + [dml(i, id=i) for i in range(8)])]
+
+    def two_actions(batch, _epoch):
+        batch.count()
+        batch.collect()
+
+    registered.streams.addListener(listener)
+    try:
+        with MockMaxScaleServer(script=script, keep_open=30.0) as addr:
+            q = (
+                registered.readStream.format("maxscale_cdc")
+                .options(**read_options(addr))
+                .load()
+                .writeStream.foreachBatch(two_actions)
+                .trigger(processingTime="200 milliseconds")
+                .start()
+            )
+            try:
+                deadline = time.monotonic() + 30
+                while listener.totals.number_of_events < 9 and time.monotonic() < deadline:
+                    time.sleep(0.2)
+                time.sleep(1.0)  # an over-count would land within a few triggers
+            finally:
+                q.stop()
+    finally:
+        registered.streams.removeListener(listener)
+    assert listener.totals.number_of_events == 9  # 1 DDL + 8 DML sent
+    busy = [s for s in seen if s.number_of_events]
+    assert busy and all(set(s.durations_ms) == set(PHASES) for s in busy)
+    assert all(s.durations_ms["addBatch"] > 0 for s in busy)
 
 
 def test_two_table_sources_compose(registered):
